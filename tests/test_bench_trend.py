@@ -168,9 +168,8 @@ def test_merge_ratio_history_accumulates_band():
 
 
 def test_interleave_round_mode_resolves_last_boundary():
-    """--round compares against the DRIVER's last round-boundary
-    commit — same primitive the registry's recheck tier uses. Skips on
-    a fresh clone without driver history."""
+    """--round compares against the last round-boundary commit.
+    Skips on a fresh clone without that history."""
     import subprocess
 
     import pytest

@@ -1,5 +1,6 @@
 """Streaming layer: file-source replay, windows, watermark, dedup."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreducegcp_spark.sources.catalog import load_table
@@ -649,3 +650,21 @@ def test_ephemeral_checkpoint_root_and_cleanup(spark, monkeypatch, tmp_path):
     assert out.count() > 0
     leftovers = [p for p in os.listdir(tmp_path) if p.startswith("mapreducegcp_ckpt_")]
     assert leftovers == [], leftovers
+
+
+def test_checkpoint_removed_when_start_fails(spark, monkeypatch, tmp_path):
+    """A writer chain that raises before ``start()`` returns must still
+    remove the checkpoint directory: cleanup may not depend on the
+    query having started."""
+    from pyspark.errors import IllegalArgumentException
+
+    import mapreducegcp_spark.streaming.events as ev
+
+    ckpt = tmp_path / "mapreducegcp_ckpt_bogus"
+    ckpt.mkdir()
+    (ckpt / "offsets").mkdir()
+    monkeypatch.setattr(ev, "_ephemeral_checkpoint", lambda name: str(ckpt))
+    df = events_stream(spark, SF_DIR)
+    with pytest.raises(IllegalArgumentException):
+        ev.run_to_memory(df, "bogus")
+    assert not ckpt.exists()

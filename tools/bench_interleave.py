@@ -64,9 +64,9 @@ def _git(*args: str) -> str:
 
 def last_round_boundary() -> str:
     """Hash of the last driver round-boundary commit. Anchored to the
-    VERDICT subject like registry._ROUND_BOUNDARY_SUBJECT: the
-    harness's own "round N: end-of-round snapshot" commits would
-    otherwise become the comparison base (round-12 verdict ask #1)."""
+    VERDICT subject: the harness's own "round N: end-of-round
+    snapshot" commits would otherwise become the comparison base
+    (round-12 verdict ask #1)."""
     return _git("log", "-n1", "--format=%H", "-E", "--grep=^round [0-9]+: verdict")
 
 

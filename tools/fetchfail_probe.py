@@ -17,10 +17,11 @@ re-runs the fetch. This probe executes that path deterministically:
 - per query, pin the physical RDD (``df.rdd``) and materialize every
   shuffle with ``count()`` — re-running an action on the SAME RDD
   reuses registered map outputs instead of replanning new shuffles;
-- overwrite every ``.data`` file of the HIGHEST shuffle id with
-  garbage (the result stage refetches exactly that shuffle; earlier
-  shuffles stay intact so the resubmitted map stage reruns from them,
-  a cascade only as deep as the damage — the 100 TB behavior);
+- overwrite every shuffle ``.data`` file under the probe's own
+  ``SPARK_LOCAL_DIRS`` root (a fresh temp dir, removed on exit) with
+  garbage — files of other Spark sessions on the host are never
+  touched; the resubmitted map stages rerun from whatever lineage
+  survives, a cascade only as deep as the damage;
 - ``collect()`` again: the lz4 stream fails, shuffle-read wraps it in
   FetchFailedException (spark.shuffle.detectCorrupt), the stage
   resubmits, and the rows that come back must hash-equal a clean
@@ -50,12 +51,13 @@ union-find query.
 
 from __future__ import annotations
 
-import glob
 import hashlib
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -103,24 +105,20 @@ def _stage_stats(spark) -> tuple[int, int]:
     return failed, resubmitted
 
 
-def _corrupt_shuffles() -> tuple[int, int]:
-    """Overwrite every shuffle .data file across all executor
-    block-manager dirs — whichever shuffle the result stage refetches,
-    it hits damage; stages whose outputs live in localCheckpoint
-    blocks recompute from those, so the resubmission cascade is only
-    as deep as the actual lineage. Returns (shuffle ids, files hit)."""
-    pats = [
-        "/tmp/spark-*/executor-*/blockmgr-*/*/shuffle_*.data",
-        "/tmp/spark-*/blockmgr-*/*/shuffle_*.data",
-    ]
-    files = [f for p in pats for f in glob.glob(p)]
+def _corrupt_shuffles(root: str) -> tuple[int, int]:
+    """Overwrite every shuffle .data file under ``root`` (this probe's
+    private local dir, which holds every executor's block-manager dirs)
+    — whichever shuffle the result stage refetches, it hits damage;
+    stages whose outputs live in localCheckpoint blocks recompute from
+    those, so the resubmission cascade is only as deep as the actual
+    lineage. Returns (shuffle ids, files hit)."""
     ids: set[int] = set()
     hit = 0
-    for f in files:
-        m = re.match(r"shuffle_(\d+)_", os.path.basename(f))
+    for f in Path(root).rglob("shuffle_*.data"):
+        m = re.match(r"shuffle_(\d+)_", f.name)
         if not m:
             continue
-        sz = os.path.getsize(f)
+        sz = f.stat().st_size
         if sz == 0:
             continue
         with open(f, "r+b") as fh:
@@ -128,12 +126,25 @@ def _corrupt_shuffles() -> tuple[int, int]:
         ids.add(int(m.group(1)))
         hit += 1
     if not hit:
-        raise RuntimeError("no shuffle .data files found to corrupt")
+        raise RuntimeError(f"no shuffle .data files found to corrupt under {root}")
     return len(ids), hit
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    # A private local root, set in the environment before the JVM starts:
+    # SPARK_LOCAL_DIRS overrides spark.local.dir for the local-cluster
+    # workers and executors, and an inherited value would point them at
+    # a directory other Spark sessions share.
+    root = tempfile.mkdtemp(prefix="fetchfail-probe-")
+    os.environ["SPARK_LOCAL_DIRS"] = root
+    try:
+        return _run(sf_dir, root)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _run(sf_dir: str, root: str) -> int:
     from pyspark.sql import SparkSession
 
     repo = str(Path(__file__).resolve().parent.parent)
@@ -158,7 +169,7 @@ def main() -> int:
         rdd = qs[name].fn(spark, sf_dir).rdd
         rdd.count()
         failed0, resub0 = _stage_stats(spark)
-        n_ids, hit = _corrupt_shuffles()
+        n_ids, hit = _corrupt_shuffles(root)
         rows = rdd.collect()
         n, digest = row_hash_rows(rows)
         failed1, resub1 = _stage_stats(spark)

@@ -82,9 +82,9 @@ REGISTER: list[tuple[str, str, str]] = [
     (
         r"no round-boundary commit",
         "checkout",
-        "git-derived recheck tier needs a 'round N:' commit; a fresh "
-        "clone without driver history skips the integration assert "
-        "(unit coverage remains)",
+        "bench_interleave --round needs a 'round N: verdict' commit; "
+        "a fresh clone without that history skips the integration "
+        "assert (unit coverage remains)",
     ),
 ]
 

@@ -13,17 +13,17 @@ real consumer would use, then:
 
 1. entry smoke: > 0 rows, stable schema;
 2. contract: set(queries()) == set(oracle_sql());
-3. strict compare (sorted column names, sorted repr'd row multisets —
-   the driver's method) for the ROTATION FRONT (the stalest-evidence /
-   recheck-tier queries the driver will check next) plus any names
-   passed on the command line;
+3. strict compare (sorted column names, sorted repr'd row multisets)
+   for the names passed on the command line;
 4. edge probes: nonexistent sf_dir raises cleanly, empty literal
    corpus yields empty wordcount, unknown table -> KeyError.
 
-    python tools/verify_contract.py                 # front-12 + probes
-    python tools/verify_contract.py --front 20
-    python tools/verify_contract.py name1 name2 ... # specific queries
+    python tools/verify_contract.py                 # smoke + contract + probes
+    python tools/verify_contract.py name1 name2 ... # plus strict compares
     python tools/verify_contract.py --sf-dir /root/testdata/sf0.01
+
+The full-catalog strict compare from outside the checkout is the
+Tier-1 test ``tests/test_oracle_gate.py``.
 """
 
 from __future__ import annotations
@@ -45,10 +45,8 @@ TABLES = [
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("names", nargs="*", help="extra queries to strict-compare")
+    ap.add_argument("names", nargs="*", help="queries to strict-compare")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    ap.add_argument("--front", type=int, default=12,
-                    help="how many rotation-front queries to compare")
     ap.add_argument("--_inner", action="store_true", help=argparse.SUPPRESS)
     args = ap.parse_args()
 
@@ -56,7 +54,7 @@ def main() -> int:
         # re-exec from /tmp: the whole point is a fresh process whose
         # cwd is NOT the checkout
         cmd = [sys.executable, str(Path(__file__).resolve()), "--_inner",
-               "--sf-dir", args.sf_dir, "--front", str(args.front), *args.names]
+               "--sf-dir", args.sf_dir, *args.names]
         return subprocess.run(cmd, cwd="/tmp").returncode
 
     sys.path.insert(0, str(REPO))
@@ -88,9 +86,8 @@ def main() -> int:
         src = f"{p}/*.parquet" if p.is_dir() else str(p)
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
 
-    sample = list(dict.fromkeys(list(qs)[: args.front] + args.names))
     fails: list[str] = []
-    for name in sample:
+    for name in args.names:
         t0 = time.time()
         sdf = qs[name](spark, args.sf_dir).toPandas()
         ddf = con.execute(oracles[name]).fetchdf()
@@ -104,7 +101,7 @@ def main() -> int:
               f"{name} ({len(sdf)} rows, {time.time() - t0:.1f}s)", flush=True)
         if not ok:
             fails.append(name)
-    report["strict"] = {"pass": len(sample) - len(fails), "fail": fails}
+    report["strict"] = {"pass": len(args.names) - len(fails), "fail": fails}
 
     # edge probes
     probes = {}
