@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mapreducegcp_spark.functions.session_cache import fingerprint, memo
 from mapreducegcp_spark.functions.vectors import blas_pair_candidates, cosine, dot, l2_norm
 from mapreducegcp_spark.registry import register
 from mapreducegcp_spark.sources.catalog import load_table
@@ -297,9 +298,6 @@ def lsh_params(n: int, p: float = _LSH_DESIGN_P) -> tuple[int, int, int]:
 _LSH_CAL_SAMPLES = 64  # calibration sample size (deterministic hash pick)
 
 
-_CALIBRATION_CACHE: dict[str, dict] = {}
-
-
 def ann_calibration(spark: SparkSession, sf_dir: str) -> dict:
     """Ingest-time ANN ground-truth sample: ~64 corpus vectors picked
     by deterministic id hash, each with its exact top-k neighbors
@@ -310,37 +308,36 @@ def ann_calibration(spark: SparkSession, sf_dir: str) -> dict:
     module derives — the LSH design cosine (lsh_design_p), the PQ
     re-rank budget (pq_cand_calibrated) and the IVF probe depth
     (ivf_nprobe_calibrated) — the same held-out-sample tuning loop
-    FAISS's autotune runs, cached per (corpus path, payload bytes)
-    like the quantizer artifacts. Returns {} for corpora too small to
-    sample; consumers fall back to their size-only derivations.
+    FAISS's autotune runs, kept and persisted like the quantizers
+    (_index_state). Returns {} for corpora too small to sample;
+    consumers fall back to their size-only derivations.
 
     Shape: {"sample_ids": [..], "sample_vecs": [[..]..],
     "topk": {sample_id: [(vec_id, cos), .. <=k]}}."""
+    return _index_state(
+        spark,
+        sf_dir,
+        "anncal",
+        f"_k{_TOP_K}_s{_LSH_CAL_SAMPLES}",
+        lambda: _calibrate(spark, sf_dir),
+        _decode_calibration,
+    )
+
+
+def _decode_calibration(doc: dict) -> dict:
+    """A persisted calibration: JSON object keys are strings and pairs
+    are lists; ``topk`` is keyed by integer sample id."""
+    if doc:
+        doc["topk"] = {
+            int(k): [(int(v), float(c)) for v, c in vs]
+            for k, vs in doc["topk"].items()
+        }
+    return doc
+
+
+def _calibrate(spark: SparkSession, sf_dir: str) -> dict:
     import numpy as np
 
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (
-        f"anncal_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_b{_corpus_bytes(path)}_k{_TOP_K}_s{_LSH_CAL_SAMPLES}"
-        if os.path.exists(path)
-        else None  # synthetic corpus (tests): compute, never cache
-    )
-    if key is not None and key in _CALIBRATION_CACHE:
-        return _CALIBRATION_CACHE[key]
-    if key is not None:
-        apath = _ARTIFACT_DIR / f"{key}.json"
-        if apath.exists():
-            doc = json.loads(apath.read_text())
-            cal = {
-                "sample_ids": doc["sample_ids"],
-                "sample_vecs": doc["sample_vecs"],
-                "topk": {
-                    int(k): [(int(v), float(c)) for v, c in vs]
-                    for k, vs in doc["topk"].items()
-                },
-            }
-            _CALIBRATION_CACHE[key] = cal
-            return cal
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = emb.filter(~F.col("vec_id").isin(*_QUERY_IDS))
     n = corpus_count(spark, sf_dir)
@@ -356,8 +353,6 @@ def ann_calibration(spark: SparkSession, sf_dir: str) -> dict:
         .collect()
     ]
     if not sample:
-        if key is not None:
-            _CALIBRATION_CACHE[key] = {}
         return {}
     S = np.asarray([v for _, v in sample], dtype=np.float64)
     Sn = S / np.maximum(np.linalg.norm(S, axis=1, keepdims=True), 1e-12)
@@ -404,31 +399,11 @@ def ann_calibration(spark: SparkSession, sf_dir: str) -> dict:
         topk.setdefault(int(r["sample_id"]), []).append(
             (int(r["vec_id"]), float(r["cos"]))
         )
-    cal = {
+    return {
         "sample_ids": [i for i, _ in sample],
         "sample_vecs": [v for _, v in sample],
         "topk": topk,
     }
-    if key is not None:
-        _CALIBRATION_CACHE[key] = cal
-        try:  # persist next to the quantizer artifacts (ingest-time stat)
-            _ARTIFACT_DIR.mkdir(parents=True, exist_ok=True)
-            (_ARTIFACT_DIR / f"{key}.json").write_text(
-                json.dumps(
-                    {
-                        "sample_ids": cal["sample_ids"],
-                        "sample_vecs": cal["sample_vecs"],
-                        "topk": {str(k): v for k, v in topk.items()},
-                    }
-                )
-            )
-        except OSError as e:
-            logging.getLogger(__name__).warning(
-                "ann calibration artifact not persisted (%s); "
-                "next process re-measures",
-                e,
-            )
-    return cal
 
 
 def lsh_design_p(spark: SparkSession, sf_dir: str) -> float:
@@ -695,82 +670,75 @@ def train_ivf_centroids(
 
 # Trained quantizers are INDEX ARTIFACTS: built once per corpus (like
 # any ANN index), persisted as JSON next to the package, and loaded by
-# queries. Keyed by corpus directory basename + hyperparameters;
-# deterministic training makes the artifacts reproducible from the
-# data. tools/build_ivf_index.py rebuilds them.
+# queries. Named by corpus directory basename + payload bytes +
+# hyperparameters; deterministic training makes the artifacts
+# reproducible from the data. tools/build_ivf_index.py rebuilds them.
 _ARTIFACT_DIR = Path(__file__).resolve().parent.parent / "artifacts"
-_CENTROID_CACHE: dict[str, list[list[float]]] = {}
 
 
-def _corpus_bytes(path: str) -> int:
-    """Total payload bytes of a parquet table at ``path``, for the
-    artifact freshness keys below. A table may be a single FILE or a
-    DIRECTORY of part files (tools/blowup_probe.py layout) —
-    ``os.path.getsize`` on a directory returns the inode size (4096
-    on ext4), which is the same for EVERY directory: a regenerated
-    corpus at the same path would silently reuse stale centroids, the
-    exact no-signal failure the size key exists to prevent. Sum the
-    entries instead."""
-    if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(path, f))
-            for f in sorted(os.listdir(path))
-            if os.path.isfile(os.path.join(path, f))
+def _artifact(name: str | None, build, decode):
+    """The index artifact ``_ARTIFACT_DIR/<name>.json``: ``decode`` of
+    the persisted JSON when it exists, else ``decode(build())``
+    persisted for the next process (a read-only checkout logs and
+    serves the built value). ``name`` is None when the corpus cannot be
+    statted: build every time, persist nothing."""
+    if name is None:
+        return decode(build())
+    path = _ARTIFACT_DIR / f"{name}.json"
+    if path.exists():
+        return decode(json.loads(path.read_text()))
+    value = decode(build())
+    try:
+        _ARTIFACT_DIR.mkdir(parents=True, exist_ok=True)
+        path.write_text(json.dumps(value))
+    except OSError as e:
+        logging.getLogger(__name__).warning(
+            "index artifact %s not persisted (%s); the next process rebuilds it",
+            name,
+            e,
         )
-    return os.path.getsize(path)
+    return value
 
 
-def _tuned_scalar(key: str | None, cache: dict, compute) -> int:
-    """Shared persistence path for the tuned ANN scalars (PQ re-rank
-    budget, IVF probe depth): in-process cache -> on-disk artifact
-    (_ARTIFACT_DIR/<key>.json) -> compute + persist — the SAME
-    contract as the anncal/centroid artifacts, so a new process never
-    re-pays the full-corpus calibration scan the scalar was derived
-    from (the PQ budget alone is an n x 64 ADC crossJoin). ``key`` is
-    None for unstattable corpora (tests with monkeypatched
-    load_table): compute every time, never cache or persist."""
-    if key is not None and key in cache:
-        return cache[key]
-    if key is not None:
-        path = _ARTIFACT_DIR / f"{key}.json"
-        if path.exists():
-            v = int(json.loads(path.read_text()))
-            cache[key] = v
-            return v
-    v = int(compute())
-    if key is not None:
-        try:
-            _ARTIFACT_DIR.mkdir(parents=True, exist_ok=True)
-            (_ARTIFACT_DIR / f"{key}.json").write_text(json.dumps(v))
-        except OSError as e:
-            logging.getLogger(__name__).warning(
-                "tuned scalar %s not persisted (%s); the next process "
-                "re-pays its calibration scan", key, e
-            )
-        cache[key] = v
-    return v
+def _index_state(
+    spark: SparkSession, sf_dir: str, prefix: str, params: str, build, decode
+):
+    """Per-corpus ANN index state (quantizers, calibration, tuned
+    scalars): memoized per session over ``embeddings.parquet``
+    (functions/session_cache.py) and backed by the artifact
+    ``<prefix>_<corpus dir name>_b<payload bytes><params>``. The byte
+    size in the name keeps an artifact tied to the exact corpus it was
+    trained on: a corpus regenerated at the same path under a name-only
+    key would silently be served state trained on the previous corpus,
+    degrading recall with no signal."""
+    path = os.path.join(sf_dir, "embeddings.parquet")
 
+    def load():
+        fp = fingerprint(path)
+        name = (
+            f"{prefix}_{os.path.basename(os.path.normpath(sf_dir))}_b{fp[0]}{params}"
+            if fp is not None
+            else None
+        )
+        return _artifact(name, build, decode)
 
-_COUNT_CACHE: dict[str, int] = {}
+    return memo(spark, [path], (prefix, params), load)
 
 
 def corpus_count(spark: SparkSession, sf_dir: str) -> int:
     """Row count of the ``embeddings`` corpus at ``sf_dir`` — THE corpus
     statistic the ANN hyperparameter derivations below key on.
 
-    Cached per (directory, payload bytes) like the centroid artifacts:
-    one parquet metadata-level count per corpus per process, so the
-    adaptive plans never pay a per-invocation scan. At production scale
-    this is catalog metadata (table statistics), not a query."""
-    p = os.path.join(sf_dir, "embeddings.parquet")
-    if not os.path.exists(p):
-        # synthetic corpus (tests monkeypatch load_table): no on-disk
-        # freshness key exists, so never cache
-        return load_table(spark, sf_dir, "embeddings").count()
-    key = f"{os.path.normpath(sf_dir)}:{_corpus_bytes(p)}"
-    if key not in _COUNT_CACHE:
-        _COUNT_CACHE[key] = load_table(spark, sf_dir, "embeddings").count()
-    return _COUNT_CACHE[key]
+    Memoized per session and corpus: one parquet metadata-level count
+    per corpus, so the adaptive plans never pay a per-invocation scan.
+    At production scale this is catalog metadata (table statistics),
+    not a query."""
+    return memo(
+        spark,
+        [os.path.join(sf_dir, "embeddings.parquet")],
+        ("corpus_count",),
+        lambda: load_table(spark, sf_dir, "embeddings").count(),
+    )
 
 
 def ivf_centroids(
@@ -784,38 +752,15 @@ def ivf_centroids(
 
     Training per query invocation was 3.7s of every similarity_ann_ivf
     call; an IVF index at scale is trained once when the corpus is
-    ingested and shipped as a (k, dim) artifact — this mirrors that.
+    ingested and shipped as a (k, dim) artifact — this mirrors that."""
 
-    The key carries the corpus BYTE SIZE alongside the directory name:
-    an index is only valid for the exact corpus it was trained on, and
-    the driver regenerates testdata between rounds — a name-only key
-    would silently serve centroids trained on the previous corpus
-    (same path, different bytes) and degrade recall with no signal."""
-    emb_bytes = _corpus_bytes(os.path.join(sf_dir, "embeddings.parquet"))
-    key = (
-        f"ivf_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_b{emb_bytes}_k{k}_i{iters}"
-    )
-    if key in _CENTROID_CACHE:
-        return _CENTROID_CACHE[key]
-    path = _ARTIFACT_DIR / f"{key}.json"
-    if path.exists():
-        C = json.loads(path.read_text())
-    else:
+    def train():
         emb = load_table(spark, sf_dir, "embeddings")
-        C = train_ivf_centroids(emb.filter(~F.col("vec_id").isin(*_QUERY_IDS)), k, iters)
-        try:
-            _ARTIFACT_DIR.mkdir(parents=True, exist_ok=True)
-            path.write_text(json.dumps(C))
-        except OSError as e:
-            # read-only checkout: the in-memory cache still serves this
-            # process, but log it — a silent miss here means every NEW
-            # process retrains (ADVICE r6)
-            logging.getLogger(__name__).warning(
-                "ivf centroid artifact not persisted (%s); next process retrains", e
-            )
-    _CENTROID_CACHE[key] = C
-    return C
+        return train_ivf_centroids(
+            emb.filter(~F.col("vec_id").isin(*_QUERY_IDS)), k, iters
+        )
+
+    return _index_state(spark, sf_dir, "ivf", f"_k{k}_i{iters}", train, list)
 
 
 LSH_RECALL_FLOOR = 0.85  # measured 0.98 at sf0.01 with derived params (r7)
@@ -863,9 +808,6 @@ register("similarity_ann_lsh", oracle=_RECALL_ORACLE, tags=("llm-pipeline",))(
 )
 
 
-_NPROBE_CACHE: dict[str, int] = {}
-
-
 def ivf_nprobe_calibrated(spark: SparkSession, sf_dir: str, C) -> int:
     """Probe depth measured on the calibration sample: for each
     sampled vector, how deep into ITS ranked centroid list do the
@@ -877,19 +819,16 @@ def ivf_nprobe_calibrated(spark: SparkSession, sf_dir: str, C) -> int:
 
     All arithmetic is driver-side numpy over the bounded sample
     (64 queries x k neighbors x nlist centroids); the only Spark work
-    is one bounded collect of the neighbors' embeddings. Persisted to
-    _ARTIFACT_DIR like the centroids it belongs with (_tuned_scalar),
-    keyed on corpus basename + payload bytes + nlist."""
-    nlist = len(C)
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (
-        f"nprobe_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_b{_corpus_bytes(path)}_k{nlist}"
-        if os.path.exists(path)
-        else None
-    )
-    return _tuned_scalar(
-        key, _NPROBE_CACHE, lambda: _nprobe_compute(spark, sf_dir, C)
+    is one bounded collect of the neighbors' embeddings. Kept and
+    persisted like the centroids it belongs with (_index_state),
+    per nlist."""
+    return _index_state(
+        spark,
+        sf_dir,
+        "nprobe",
+        f"_k{len(C)}",
+        lambda: _nprobe_compute(spark, sf_dir, C),
+        int,
     )
 
 
@@ -1339,29 +1278,15 @@ def train_pq_codebooks(
 
 def pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
     """Load (or train-and-persist) the PQ codebooks for ``sf_dir`` —
-    the same corpus-size-keyed artifact contract as ``ivf_centroids``."""
-    emb_bytes = _corpus_bytes(os.path.join(sf_dir, "embeddings.parquet"))
-    key = (
-        f"pq_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_b{emb_bytes}_m{_PQ_M}_k{_PQ_K}_i{_PQ_ITERS}"
-    )
-    if key in _CENTROID_CACHE:
-        return _CENTROID_CACHE[key]
-    path = _ARTIFACT_DIR / f"{key}.json"
-    if path.exists():
-        CB = json.loads(path.read_text())
-    else:
+    the same index-artifact path as ``ivf_centroids``."""
+
+    def train():
         emb = load_table(spark, sf_dir, "embeddings")
-        CB = train_pq_codebooks(emb.filter(~F.col("vec_id").isin(*_QUERY_IDS)))
-        try:
-            _ARTIFACT_DIR.mkdir(parents=True, exist_ok=True)
-            path.write_text(json.dumps(CB))
-        except OSError as e:
-            logging.getLogger(__name__).warning(
-                "pq codebook artifact not persisted (%s); next process retrains", e
-            )
-    _CENTROID_CACHE[key] = CB
-    return CB
+        return train_pq_codebooks(emb.filter(~F.col("vec_id").isin(*_QUERY_IDS)))
+
+    return _index_state(
+        spark, sf_dir, "pq", f"_m{_PQ_M}_k{_PQ_K}_i{_PQ_ITERS}", train, list
+    )
 
 
 def _pq_encode_udf(CB):
@@ -1418,9 +1343,6 @@ def _pq_lut_udf(CB):
     return lut
 
 
-_PQ_BUDGET_CACHE: dict[str, int] = {}
-
-
 def pq_cand_calibrated(spark: SparkSession, sf_dir: str) -> int:
     """Re-rank budget measured end-to-end on the calibration sample:
     run the REAL ADC scan (same codebooks, same fold) with the ~64
@@ -1430,20 +1352,17 @@ def pq_cand_calibrated(spark: SparkSession, sf_dir: str) -> int:
     cover, no noise model in between (FAISS autotune's method).
     Floored at the calibration-scale 160, capped at the corpus size;
     falls back to the size-only fraction rule (pq_cand_budget) when
-    the corpus is too small to sample. Persisted to _ARTIFACT_DIR
-    like the codebooks (_tuned_scalar), keyed on corpus basename +
-    payload bytes + PQ shape — one n x 64 ADC pass at ingest time,
-    never re-paid by a new process."""
+    the corpus is too small to sample. Kept and persisted like the
+    codebooks (_index_state), per PQ shape — one n x 64 ADC pass at
+    ingest time, never re-paid by a new process."""
     n = corpus_count(spark, sf_dir)
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (
-        f"pqbudget_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_b{_corpus_bytes(path)}_m{_PQ_M}_k{_PQ_K}"
-        if os.path.exists(path)
-        else None
-    )
-    return _tuned_scalar(
-        key, _PQ_BUDGET_CACHE, lambda: _pq_budget_compute(spark, sf_dir, n)
+    return _index_state(
+        spark,
+        sf_dir,
+        "pqbudget",
+        f"_m{_PQ_M}_k{_PQ_K}",
+        lambda: _pq_budget_compute(spark, sf_dir, n),
+        int,
     )
 
 

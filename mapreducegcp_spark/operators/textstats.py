@@ -21,11 +21,14 @@ needs the explicit ``'g'`` flag to match Spark's replace-all default.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mapreducegcp_spark.functions.exact import o_pct, o_sorted_list
+from mapreducegcp_spark.functions.session_cache import memo
 from mapreducegcp_spark.functions.text import TOKEN_ORACLE_EXPR, tokens
 from mapreducegcp_spark.registry import register
 from mapreducegcp_spark.sources.catalog import load_table
@@ -1293,51 +1296,29 @@ doc_words AS MATERIALIZED (
 )"""
 
 
-_MERGES_CACHE: dict[str, dict[int, list[tuple[int, str, str, str]]]] = {}
-
-
 def _trained_merges(spark: SparkSession, sf_dir: str) -> dict:
     """Round-grouped BPE merge rules for ``sf_dir``, trained once per
-    corpus per process. A tokenizer is a TRAINED ARTIFACT — production
-    trains it at ingest and ships the merge table, exactly like the
-    IVF/PQ quantizers (similarity.py) — so the three consumers
-    (encode / fertility / tokenizer-dataset) must not each re-pay the
-    8-driver-sync training loop (~2.7s of each query's ~3.2s at
-    sf0.1). Keyed on the documents table's path + payload bytes so a
-    regenerated corpus retrains (same freshness rule as the centroid
-    caches, including the directory-layout inode-size fix)."""
-    import os
+    corpus per session (functions/session_cache.py). A tokenizer is a
+    TRAINED ARTIFACT — production trains it at ingest and ships the
+    merge table, exactly like the IVF/PQ quantizers (similarity.py) —
+    so the three consumers (encode / fertility / tokenizer-dataset)
+    must not each re-pay the 8-driver-sync training loop (~2.7s of
+    each query's ~3.2s at sf0.1)."""
 
-    p = os.path.join(sf_dir, "documents.parquet")
-    if os.path.isdir(p):
-        n_bytes = sum(
-            os.path.getsize(os.path.join(p, f))
-            for f in sorted(os.listdir(p))
-            if os.path.isfile(os.path.join(p, f))
-        )
-    elif os.path.exists(p):
-        n_bytes = os.path.getsize(p)
-    else:
-        # synthetic corpus (tests monkeypatch load_table): no on-disk
-        # freshness key exists, so never cache — train directly
+    def train() -> dict:
         rounds: dict[int, list[tuple[int, str, str, str]]] = {}
         for r in q_bpe_train_merges(spark, sf_dir).collect():
             rounds.setdefault(int(r["round"]), []).append(
                 (int(r["merge_rank"]), r["left_sym"], r["right_sym"], r["merged"])
             )
         return rounds
-    key = (
-        f"{os.path.normpath(sf_dir)}:{n_bytes}"
-        f":{_BPE_TRAIN_ROUNDS}x{_BPE_BATCH}c{_BPE_CAND}"
+
+    return memo(
+        spark,
+        [os.path.join(sf_dir, "documents.parquet")],
+        ("bpe_merges", _BPE_TRAIN_ROUNDS, _BPE_BATCH, _BPE_CAND),
+        train,
     )
-    if key not in _MERGES_CACHE:
-        rounds: dict[int, list[tuple[int, str, str, str]]] = {}
-        for r in q_bpe_train_merges(spark, sf_dir).collect():
-            rounds.setdefault(int(r["round"]), []).append(
-                (int(r["merge_rank"]), r["left_sym"], r["right_sym"], r["merged"])
-            )
-        _MERGES_CACHE[key] = rounds
-    return _MERGES_CACHE[key]
 
 
 def _encoded_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:

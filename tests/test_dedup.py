@@ -590,3 +590,68 @@ def test_has_verbatim_dups_both_ways(spark, tmp_path):
     ).astype({"doc_id": "int64", "n_chars": "int64"})
     pdf.to_parquet(tmp_path / "documents.parquet", index=False)
     assert has_verbatim_dups(spark, str(tmp_path)) is True
+
+
+def _write_docs(path, texts):
+    import pandas as pd
+
+    pdf = pd.DataFrame(
+        {
+            "doc_id": list(texts),
+            "text": list(texts.values()),
+            "lang": "en",
+            "source": "test",
+            "n_chars": [len(t) for t in texts.values()],
+        }
+    ).astype({"doc_id": "int64", "n_chars": "int64"})
+    pdf.to_parquet(path / "documents.parquet", index=False)
+
+
+def test_minhash_lsh_follows_a_corpus_overwritten_in_place(spark, tmp_path):
+    """Overwriting documents.parquet at the same path must change the
+    dedup_minhash_lsh answer to the new corpus's: the warm-pass
+    signature reuse may not hand the first corpus's signatures to a
+    fresh read of the rewritten file. Both corpora are duplicate-free,
+    so the query takes the same plan shape both times."""
+    import duckdb
+
+    from mapreducegcp_spark.registry import all_queries
+
+    rq = all_queries()["dedup_minhash_lsh"]
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+
+    def check():
+        got = sorted(
+            (r.doc_a, r.doc_b, r.jaccard_est)
+            for r in rq.fn(spark, str(tmp_path)).collect()
+        )
+        con = duckdb.connect()
+        con.execute(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{tmp_path}/documents.parquet')"
+        )
+        want = sorted(map(tuple, con.execute(rq.oracle).fetchall()))
+        assert got == want, (got, want)
+        return {(a, b) for a, b, _ in got}
+
+    _write_docs(
+        tmp_path,
+        {
+            1: base,
+            2: base + " today",
+            3: "completely unrelated text about distributed query engines",
+            4: "another singleton document mentioning columnar parquet files",
+        },
+    )
+    assert check() == {(1, 2)}
+    _write_docs(
+        tmp_path,
+        {
+            1: "pack my box with five dozen liquor jugs right now please",
+            2: "a lone document about sorting networks and merge paths",
+            3: "pack my box with five dozen liquor jugs right now thanks",
+            4: base,
+            5: "yet another unrelated sentence on vectorized execution",
+        },
+    )
+    assert check() == {(1, 3)}

@@ -679,23 +679,39 @@ def _write_dup_corpus(tmp_path):
     pdf.to_parquet(tmp_path / "documents.parquet", index=False)
 
 
-def test_minhash_lsh_exact_collapse_precedes_banding(spark, tmp_path):
+def test_minhash_lsh_exact_collapse_precedes_banding(spark, monkeypatch, tmp_path):
     """dedup_minhash_lsh composes exact-collapse BEFORE LSH banding on
     a corpus WITH verbatim duplicates: the shingle source is filtered
     by an anti-join against the DUPLICATE-sized copy set (not a semi
     against the corpus-sized map), and the output is the
     cross-expansion UNION intra-group pairs. Values strict-match the
     registered DuckDB oracle (which runs the UNCOLLAPSED semantics) on
-    the same corpus — the collapse is a pure work optimization."""
+    the same corpus — the collapse is a pure work optimization.
+
+    The signatures sit behind a session-memoized localCheckpoint, which
+    hides their plan from the consumer's, so the anti-join is looked
+    for in the plan that the signature checkpoint is built from."""
     import duckdb
 
     from mapreducegcp_spark.registry import all_queries
 
+    frame_cls = type(spark.range(1))
+    real_checkpoint = frame_cls.localCheckpoint
+    checkpointed = {}
+
+    def spy(self, *args, **kwargs):
+        checkpointed[tuple(self.columns)] = (
+            self._jdf.queryExecution().executedPlan().toString()
+        )
+        return real_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
     _write_dup_corpus(tmp_path)
     rq = all_queries()["dedup_minhash_lsh"]
     df = rq.fn(spark, str(tmp_path))
     tree = df._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti" in tree, tree[:2000]
+    sig_tree = checkpointed[("doc_id", *(f"m{i}" for i in range(32)))]
+    assert "LeftAnti" in sig_tree, sig_tree[:2000]
     assert "Union" in tree, tree[:2000]
 
     got = sorted((r.doc_a, r.doc_b, r.jaccard_est) for r in df.collect())

@@ -308,11 +308,11 @@ def test_ann_calibrators_fall_back_without_a_sample(spark, monkeypatch):
 
 def test_tuned_scalars_persist_like_the_other_ann_artifacts(spark, monkeypatch, tmp_path):
     """The calibrated PQ budget and IVF nprobe must survive process
-    death the way the anncal/centroid artifacts do (ADVICE r7: the
+    death the way the anncal/centroid artifacts do (ADVICE r7: an
     in-process cache alone meant every new process re-paid the full
-    n x 64 ADC crossJoin): _tuned_scalar writes <key>.json on first
-    compute, and a cleared in-memory cache is served from DISK with
-    the compute function never called again."""
+    n x 64 ADC crossJoin): _artifact writes <name>.json on first
+    build, and a later call (a new process: _artifact holds nothing in
+    memory) is served from DISK with the build never called again."""
     import mapreducegcp_spark.operators.similarity as sim
 
     monkeypatch.setattr(sim, "_ARTIFACT_DIR", tmp_path)
@@ -322,15 +322,13 @@ def test_tuned_scalars_persist_like_the_other_ann_artifacts(spark, monkeypatch, 
         calls.append(1)
         return 37
 
-    cache: dict = {}
-    assert sim._tuned_scalar("pqbudget_test_b1_m8_k32", cache, compute) == 37
+    assert sim._artifact("pqbudget_test_b1_m8_k32", compute, int) == 37
     assert (tmp_path / "pqbudget_test_b1_m8_k32.json").exists()
-    cache.clear()  # simulate a new process
-    assert sim._tuned_scalar("pqbudget_test_b1_m8_k32", cache, compute) == 37
+    assert sim._artifact("pqbudget_test_b1_m8_k32", compute, int) == 37
     assert len(calls) == 1, "second process must read the artifact, not recompute"
-    # key=None (unstattable corpus): compute every time, never persist
-    assert sim._tuned_scalar(None, cache, compute) == 37
-    assert sim._tuned_scalar(None, cache, compute) == 37
+    # name=None (unstattable corpus): compute every time, never persist
+    assert sim._artifact(None, compute, int) == 37
+    assert sim._artifact(None, compute, int) == 37
     assert len(calls) == 3
     assert list(tmp_path.iterdir()) == [tmp_path / "pqbudget_test_b1_m8_k32.json"]
 

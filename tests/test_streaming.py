@@ -606,23 +606,23 @@ def test_schema_probe_memo_hits_and_invalidates(spark, tmp_path):
     file without re-reading it, and a rewritten file (new mtime/size)
     misses — a stale schema must never survive a corpus swap."""
     import mapreducegcp_spark.streaming.events as ev
+    from mapreducegcp_spark.functions import session_cache
 
     p = tmp_path / "t.parquet"
     spark.range(3).selectExpr("id AS a").write.mode("overwrite").parquet(str(p))
-    ev._SCHEMA_MEMO.clear()
     s1 = ev._probed_schema(spark, str(p))
     assert [f.name for f in s1.fields] == ["a"]
-    assert len(ev._SCHEMA_MEMO) == 1
-    # hit: same object back, no new entry
+    # hit: same object back
     assert ev._probed_schema(spark, str(p)) is s1
-    assert len(ev._SCHEMA_MEMO) == 1
-    # rewrite with a different schema -> new key, fresh probe
+    entries = len(session_cache._entries)
+    # rewrite with a different schema -> stale entry replaced, fresh probe
     spark.range(3).selectExpr("id AS a", "id AS b").write.mode(
         "overwrite"
     ).parquet(str(p))
     s2 = ev._probed_schema(spark, str(p))
     assert [f.name for f in s2.fields] == ["a", "b"]
-    assert len(ev._SCHEMA_MEMO) == 2
+    assert ev._probed_schema(spark, str(p)) is s2
+    assert len(session_cache._entries) == entries
 
 
 def test_ephemeral_checkpoint_root_and_cleanup(spark, monkeypatch, tmp_path):
@@ -638,10 +638,10 @@ def test_ephemeral_checkpoint_root_and_cleanup(spark, monkeypatch, tmp_path):
     import mapreducegcp_spark.streaming.events as ev
 
     monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT_ROOT", str(tmp_path))
-    assert ev._ephemeral_checkpoint("x").startswith(str(tmp_path))
+    assert ev._ephemeral_checkpoint(spark, "x").startswith(str(tmp_path))
     monkeypatch.delenv("SPARK_GRAFT_STREAM_CKPT_ROOT")
     if os.path.isdir("/dev/shm"):
-        assert ev._ephemeral_checkpoint("x").startswith("/dev/shm/")
+        assert ev._ephemeral_checkpoint(spark, "x").startswith("/dev/shm/")
 
     # run one real streaming query confined to tmp_path and verify the
     # checkpoint dir was created under the root and removed afterwards
@@ -650,6 +650,27 @@ def test_ephemeral_checkpoint_root_and_cleanup(spark, monkeypatch, tmp_path):
     assert out.count() > 0
     leftovers = [p for p in os.listdir(tmp_path) if p.startswith("mapreducegcp_ckpt_")]
     assert leftovers == [], leftovers
+
+
+def test_ephemeral_checkpoint_off_tmpfs_for_non_local_master(monkeypatch):
+    """A non-local master runs the query's tasks on other hosts: the
+    checkpoint falls through to the env root, else the temp directory,
+    never the driver's /dev/shm."""
+    import os
+    import tempfile
+    from types import SimpleNamespace
+
+    import mapreducegcp_spark.streaming.events as ev
+
+    cluster = SimpleNamespace(
+        sparkContext=SimpleNamespace(master="spark://head:7077")
+    )
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_CKPT_ROOT", raising=False)
+    assert ev._ephemeral_checkpoint(cluster, "x") == os.path.join(
+        tempfile.gettempdir(), "mapreducegcp_ckpt_x"
+    )
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT_ROOT", "/durable")
+    assert ev._ephemeral_checkpoint(cluster, "x") == "/durable/mapreducegcp_ckpt_x"
 
 
 def test_checkpoint_removed_when_start_fails(spark, monkeypatch, tmp_path):
@@ -663,7 +684,7 @@ def test_checkpoint_removed_when_start_fails(spark, monkeypatch, tmp_path):
     ckpt = tmp_path / "mapreducegcp_ckpt_bogus"
     ckpt.mkdir()
     (ckpt / "offsets").mkdir()
-    monkeypatch.setattr(ev, "_ephemeral_checkpoint", lambda name: str(ckpt))
+    monkeypatch.setattr(ev, "_ephemeral_checkpoint", lambda spark, name: str(ckpt))
     df = events_stream(spark, SF_DIR)
     with pytest.raises(IllegalArgumentException):
         ev.run_to_memory(df, "bogus")

@@ -503,10 +503,11 @@ def test_token_budget_allocation_conserves_and_splits(spark, monkeypatch):
 def test_bpe_merges_train_once_per_corpus(spark, monkeypatch):
     """The trained merge table is a per-corpus artifact (like the IVF
     centroids): encode/fertility/tokenizer-dataset share ONE training
-    run per corpus per process — re-training per query was ~2.7s of
-    every BPE-family invocation at sf0.1. Freshness keys on the
-    documents table's payload bytes, so a regenerated corpus retrains."""
+    run per corpus per session — re-training per query was ~2.7s of
+    every BPE-family invocation at sf0.1. The session memo keys on the
+    documents table's size and mtime, so a regenerated corpus retrains."""
     import mapreducegcp_spark.operators.textstats as ts
+    from mapreducegcp_spark.functions import session_cache
 
     calls = {"n": 0}
     real = ts.q_bpe_train_merges
@@ -516,7 +517,7 @@ def test_bpe_merges_train_once_per_corpus(spark, monkeypatch):
         return real(spark_, sf_dir_)
 
     monkeypatch.setattr(ts, "q_bpe_train_merges", counting)
-    monkeypatch.setattr(ts, "_MERGES_CACHE", {})
+    session_cache._entries.clear()
     d = "/root/testdata/sf0.001"
     a = ts._encoded_vocab(spark, d).count()
     b = ts._encoded_vocab(spark, d).count()
