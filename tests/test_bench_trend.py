@@ -167,6 +167,26 @@ def test_merge_ratio_history_accumulates_band():
         assert merge_ratio_history(p, 0.97) == [0.99, 1.02, 0.97]
 
 
+def test_perfbench_pair_summary_counts_wins_in_the_better_direction():
+    from bench_interleave import pair_summary
+
+    decl = {"end_to_end": [{"name": "pass_s", "better": "lower"}],
+            "per_layer": [{"name": "exec.busy_frac", "better": "higher"}]}
+
+    def runs(name, xs):
+        return [{"metrics": {name: {"value": x}}} for x in xs]
+
+    row = pair_summary(decl, runs("pass_s", [4.0, 3.0, 5.0]),
+                       runs("pass_s", [3.0, 3.5, 2.0]), trace=0)["pass_s"]
+    assert row["change_wins"] == 2
+    assert (row["parent"]["median"], row["change"]["median"]) == (4.0, 3.0)
+    assert row["parent"]["q1"] <= 4.0 <= row["parent"]["q3"]
+    row = pair_summary(decl, runs("exec.busy_frac", [0.2]),
+                       runs("exec.busy_frac", [0.3]), trace=1)["exec.busy_frac"]
+    assert row["change_wins"] == 1
+    assert row["change"] == {"median": 0.3, "q1": 0.3, "q3": 0.3, "runs": [0.3]}
+
+
 def test_interleave_round_mode_resolves_last_boundary():
     """--round compares against the last round-boundary commit.
     Skips on a fresh clone without that history."""

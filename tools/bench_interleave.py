@@ -5,7 +5,7 @@ Single-session BENCH_r{N}.json captures carry ±10-15% session noise on
 a ~15 s headline (measured round 10: same-tree totals spread 14.4-18.0 s
 across one session, calibration flat), so a cross-ROUND ratio of two
 single captures can read 1.2x with zero code change. This tool removes
-the session variable: it checks out each revision into a git worktree
+the session variable: it exports each revision with `git archive`
 and runs `bench.py --headline-only` ALTERNATING revision per run, N
 rounds, on one box in one session — every revision sees the same cache
 state, load, and thermal conditions — then reports min-of-N per query
@@ -16,7 +16,19 @@ where the committed artifacts said 13.39/15.93) is the worked example.
     python tools/bench_interleave.py --round N   # canonical per-round capture
 
 The working tree itself is always included as revision "worktree".
-Worktrees are created under /tmp and removed afterwards.
+Each REV is exported with ``git archive`` into a temporary directory
+(``$TMPDIR``) that is removed afterwards.
+
+``--perfbench W`` is the perfbench pair mode: one REV (the parent) is
+paired against the working tree (the change). Each pair runs
+``perfbench/run.py --workload W --seed S --seconds 15 --trace 0`` once
+per side, one pair per ``--seeds`` entry, alternating which side runs
+first; the run length is ``run_seconds`` from ``BENCHMARK.json``. It
+prints each metric's per-side median and quartiles and how many pairs
+the change won, using the metric list and ``better`` direction in
+``BENCHMARK.json``::
+
+    python tools/bench_interleave.py HEAD~1 --perfbench mapred --seeds 1 2 3 4 5
 
 ``--round N`` is the round-11 canonical mode (verdict ask #1): it
 resolves the LAST ROUND-BOUNDARY COMMIT (the driver's "round N: ..."
@@ -33,6 +45,8 @@ from __future__ import annotations
 
 import argparse
 import json
+import shutil
+import statistics
 import subprocess
 import sys
 import tempfile
@@ -54,6 +68,91 @@ def bench_once(tree: Path) -> dict:
     if not lines:
         raise RuntimeError(f"no bench output from {tree}: {p.stderr[-500:]}")
     return json.loads(lines[-1])
+
+
+def perfbench_once(tree: Path, workload: str, seed: int, seconds: float, trace: int) -> dict:
+    p = subprocess.run(
+        [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
+         "--seconds", str(seconds), "--trace", str(trace)],
+        cwd=tree,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
+    if p.returncode != 0 or not lines:
+        raise RuntimeError(f"no perfbench output from {tree}: {p.stderr[-500:]}")
+    return json.loads(lines[-1])
+
+
+def pair_summary(decl: dict, parent: list[dict], change: list[dict], trace: int) -> dict:
+    """Per metric: each side's median and quartiles over its runs, and
+    how many pairs (same seed, same position in the list) the change
+    won in the metric's ``better`` direction from BENCHMARK.json."""
+    out = {}
+    for m in decl["per_layer" if trace else "end_to_end"]:
+        name, sign = m["name"], (1 if m["better"] == "lower" else -1)
+        a = [d["metrics"][name]["value"] for d in parent]
+        b = [d["metrics"][name]["value"] for d in change]
+        row = {}
+        for side, xs in (("parent", a), ("change", b)):
+            q1, med, q3 = statistics.quantiles(xs, n=4) if len(xs) > 1 else xs * 3
+            row[side] = {"median": med, "q1": q1, "q3": q3, "runs": xs}
+        row["change_wins"] = sum(sign * (y - x) < 0 for x, y in zip(a, b))
+        out[name] = row
+    return out
+
+
+def perfbench_pairs(args: argparse.Namespace, parent_tree: Path) -> dict:
+    decl = json.loads((REPO / "BENCHMARK.json").read_text())
+    sides = {"parent": parent_tree, "change": REPO}
+    docs: dict[str, list[dict]] = {"parent": [], "change": []}
+    for i, seed in enumerate(args.seeds):
+        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+        for side in order:
+            doc = perfbench_once(
+                sides[side], args.perfbench, seed, decl["run_seconds"], args.trace
+            )
+            docs[side].append(doc)
+            print(
+                f"pair {i + 1}/{len(args.seeds)} seed {seed} {side}: "
+                f"correct {doc['correct']} failed {doc['failed']}/{doc['attempted']}",
+                flush=True,
+            )
+    summary = pair_summary(decl, docs["parent"], docs["change"], args.trace)
+    n = len(args.seeds)
+    for name, row in summary.items():
+        p, c = row["parent"], row["change"]
+        print(
+            f"{name:32s} parent {p['median']:.3f} [{p['q1']:.3f}, {p['q3']:.3f}]  "
+            f"change {c['median']:.3f} [{c['q1']:.3f}, {c['q3']:.3f}]  "
+            f"change wins {row['change_wins']}/{n}"
+        )
+    return {
+        "method": "perfbench pairs, alternating first side, one box, one session",
+        "workload": args.perfbench,
+        "seeds": args.seeds,
+        "seconds": decl["run_seconds"],
+        "trace": args.trace,
+        "failed": {s: [d["failed"] for d in docs[s]] for s in docs},
+        "metrics": summary,
+    }
+
+
+def checkout(rev: str, tmp: Path) -> tuple[str, Path]:
+    """Export ``rev``'s committed files under ``tmp``; returns its
+    display name and directory."""
+    short = subprocess.run(
+        ["git", "rev-parse", "--short", rev],
+        cwd=REPO, capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    dst = tmp / short
+    dst.mkdir()
+    archive = subprocess.Popen(["git", "-C", str(REPO), "archive", rev], stdout=subprocess.PIPE)
+    subprocess.run(["tar", "-x", "-C", str(dst)], stdin=archive.stdout, check=True)
+    if archive.wait() != 0:
+        raise RuntimeError(f"git archive {rev} failed")
+    return f"{rev}@{short}", dst
 
 
 def _git(*args: str) -> str:
@@ -100,7 +199,28 @@ def main() -> None:
         help="canonical per-round mode: interleave the last round-boundary "
         "commit vs the working tree and write BENCH_INTERLEAVE_r{N}.json",
     )
+    ap.add_argument(
+        "--perfbench",
+        metavar="WORKLOAD",
+        default=None,
+        help="pair mode: run perfbench/run.py on WORKLOAD for one REV (parent) "
+        "against the working tree (change), one pair per seed",
+    )
+    ap.add_argument("--seeds", type=int, nargs="+", default=[1, 2, 3, 4, 5])
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args()
+
+    if args.perfbench is not None:
+        if len(args.revs) != 1 or args.round is not None:
+            raise SystemExit("--perfbench pairs exactly one REV against the working tree")
+        tmp = Path(tempfile.mkdtemp(prefix="bench_ilv_"))
+        try:
+            out = perfbench_pairs(args, checkout(args.revs[0], tmp)[1])
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+        if args.out:
+            Path(args.out).write_text(json.dumps(out, indent=1))
+        return
 
     prev_rev = None
     if args.round is not None:
@@ -116,21 +236,11 @@ def main() -> None:
         raise SystemExit("pass revisions to compare, or --round N")
 
     trees: dict[str, Path] = {"worktree": REPO}
-    made: list[Path] = []
     tmp = Path(tempfile.mkdtemp(prefix="bench_ilv_"))
     try:
         for rev in args.revs:
-            short = subprocess.run(
-                ["git", "rev-parse", "--short", rev],
-                cwd=REPO, capture_output=True, text=True, check=True,
-            ).stdout.strip()
-            dst = tmp / short
-            subprocess.run(
-                ["git", "worktree", "add", str(dst), rev],
-                cwd=REPO, check=True, capture_output=True,
-            )
-            trees[f"{rev}@{short}"] = dst
-            made.append(dst)
+            name, dst = checkout(rev, tmp)
+            trees[name] = dst
 
         captures: dict[str, list[dict]] = {k: [] for k in trees}
         for i in range(args.runs):
@@ -197,11 +307,7 @@ def main() -> None:
         if args.out:
             Path(args.out).write_text(json.dumps(out, indent=1))
     finally:
-        for dst in made:
-            subprocess.run(
-                ["git", "worktree", "remove", "--force", str(dst)],
-                cwd=REPO, capture_output=True,
-            )
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 if __name__ == "__main__":
