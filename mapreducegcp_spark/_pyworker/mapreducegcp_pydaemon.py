@@ -1,5 +1,11 @@
 """Python worker daemon for local sessions (``spark.python.daemon.module``).
 
+This file is a top-level module in a directory of its own, which a
+local ``get_spark`` session puts on the workers' PYTHONPATH. It must
+not import ``mapreducegcp_spark``: the workers fork from this process,
+and a package it imported would be importable in every worker, so a
+function pickled by reference would work locally and fail on a cluster.
+
 Every Python task runs ``pyspark.worker_util.setup_spark_files``, which
 calls ``importlib.invalidate_caches()`` so a zip added by ``addPyFile``
 becomes importable. Before CPython 3.13 that makes every cached
@@ -41,11 +47,7 @@ def install() -> None:
 
 
 if __name__ == "__main__":
-    # install the module's importable copy, not ``__main__``'s, so a
-    # worker can name where its invalidate_caches comes from
-    from mapreducegcp_spark.pydaemon import install as _install
-
-    _install()
+    install()
     import pyspark.daemon
 
     pyspark.daemon.manager()

@@ -20,18 +20,19 @@ session therefore sets three confs, which take those to 0.06 s,
 0.16 s and 0.37 s:
 
 - ``spark.python.daemon.module`` runs the workers under
-  ``mapreducegcp_spark.pydaemon``. Per task, ``setup_spark_files``
-  calls ``importlib.invalidate_caches()``, and before CPython 3.13 that
-  re-reads the central directory of ``pyspark.zip`` and the py4j zip
+  ``_pyworker/mapreducegcp_pydaemon.py``. Per task,
+  ``setup_spark_files`` calls ``importlib.invalidate_caches()``, and
+  before CPython 3.13 that re-reads the central directory of ``pyspark.zip`` and the py4j zip
   once per cached importer (16 of them). The daemon re-reads an
   archive only when its mtime or size changed, so ``addPyFile`` zips
   and rewritten archives are still picked up.
-- ``spark.executorEnv.PYTHONPATH`` is the directory holding this
-  package, so the worker can import the daemon module. A caller's value
-  in ``extra_conf`` is kept and joined with it. Workers can then import
-  the package by name, so a function pickled by reference works in a
-  local session; ``tools/verify_contract.py`` builds a stock session
-  and still catches one.
+- ``spark.executorEnv.PYTHONPATH`` is ``_pyworker/``, a directory
+  that holds only the daemon module, so the worker can import it. A
+  caller's value in ``extra_conf`` is kept and joined with it. The
+  daemon imports nothing from this package, so workers still cannot
+  import ``mapreducegcp_spark`` unless their cwd holds it: a function
+  pickled by reference fails in a local session started outside the
+  checkout, as it would on a cluster.
 - ``spark.python.unix.domain.socket.enabled`` replaces the loopback
   TCP channel between the JVM and the worker. With the zip re-reads
   gone, TCP still cost about 40 ms per task in blocking reads: the
@@ -40,7 +41,7 @@ session therefore sets three confs, which take those to 0.06 s,
 Together they took the ``mapred`` perfbench warm pass from 4.55 s to
 3.20 s (4 cores, median of 10 alternating pairs). All three are set
 only when the resolved master starts with ``local``: the daemon module
-and the package path exist only on the host that builds the session
+and its directory exist only on the host that builds the session
 (executors elsewhere have neither), the same gate
 ``_ephemeral_checkpoint`` uses for ``/dev/shm``. Any other master keeps
 Spark's stock daemon and the confs that ``get_spark`` sets otherwise.
@@ -53,6 +54,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"
+PYWORKER_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_pyworker")
+PYWORKER_DAEMON = "mapreducegcp_pydaemon"
 
 
 def sf_dir_from_env() -> str:
@@ -107,13 +110,12 @@ def get_spark(
     )
     extra = dict(extra_conf or {})
     if extra.get("spark.master", f"local[{n}]").startswith("local"):
-        builder = builder.config(
-            "spark.python.daemon.module", "mapreducegcp_spark.pydaemon"
-        ).config("spark.python.unix.domain.socket.enabled", "true")
-        package_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        builder = builder.config("spark.python.daemon.module", PYWORKER_DAEMON).config(
+            "spark.python.unix.domain.socket.enabled", "true"
+        )
         caller_path = extra.get("spark.executorEnv.PYTHONPATH")
         extra["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
-            p for p in (caller_path, package_root) if p
+            p for p in (caller_path, PYWORKER_DIR) if p
         )
     for k, v in extra.items():
         builder = builder.config(k, v)

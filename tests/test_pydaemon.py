@@ -1,6 +1,6 @@
 """The local Python-worker fast path: stat-keyed zip re-reads
-(``mapreducegcp_spark.pydaemon``) and the three confs ``get_spark``
-sets for a local master only.
+(``_pyworker/mapreducegcp_pydaemon.py``) and the three confs
+``get_spark`` sets for a local master only.
 
 On CPython 3.13+ ``install()`` is a no-op: the stock zipimport there
 already drops a cache entry instead of re-reading it, so the zip tests
@@ -9,7 +9,10 @@ check the same behaviour of the stock importer."""
 from __future__ import annotations
 
 import importlib
+import importlib.util
+import json
 import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -19,11 +22,14 @@ from types import SimpleNamespace
 import pytest
 from pyspark.sql import SparkSession
 
-import mapreducegcp_spark
-from mapreducegcp_spark import pydaemon
-from mapreducegcp_spark.session import get_spark
+from mapreducegcp_spark.session import PYWORKER_DAEMON, PYWORKER_DIR, get_spark
 
-PACKAGE_ROOT = str(Path(mapreducegcp_spark.__file__).resolve().parent.parent)
+REPO = Path(__file__).resolve().parent.parent
+_spec = importlib.util.spec_from_file_location(
+    PYWORKER_DAEMON, os.path.join(PYWORKER_DIR, f"{PYWORKER_DAEMON}.py")
+)
+pydaemon = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(pydaemon)
 FAST_PATH_CONFS = (
     "spark.python.daemon.module",
     "spark.executorEnv.PYTHONPATH",
@@ -127,8 +133,8 @@ def _built_options(monkeypatch, **kwargs) -> dict:
 def test_local_master_gets_the_fast_path_confs(monkeypatch):
     opts = _built_options(monkeypatch)
     assert opts["spark.master"] == "local[2]"
-    assert opts["spark.python.daemon.module"] == "mapreducegcp_spark.pydaemon"
-    assert opts["spark.executorEnv.PYTHONPATH"] == PACKAGE_ROOT
+    assert opts["spark.python.daemon.module"] == PYWORKER_DAEMON
+    assert opts["spark.executorEnv.PYTHONPATH"] == PYWORKER_DIR
     assert opts["spark.python.unix.domain.socket.enabled"] == "true"
 
 
@@ -146,8 +152,12 @@ def test_callers_executor_pythonpath_is_kept_and_joined(monkeypatch):
     )
     assert opts["spark.executorEnv.PYTHONPATH"].split(os.pathsep) == [
         "/srv/callers/lib",
-        PACKAGE_ROOT,
+        PYWORKER_DIR,
     ]
+
+
+def test_workers_path_holds_only_the_daemon_module():
+    assert sorted(p.name for p in Path(PYWORKER_DIR).glob("*.py")) == [f"{PYWORKER_DAEMON}.py"]
 
 
 def test_worker_runs_the_stat_keyed_invalidation(spark):
@@ -159,15 +169,64 @@ def test_worker_runs_the_stat_keyed_invalidation(spark):
 
         for _ in batches:
             pass
+        owner = zipimport.zipimporter.invalidate_caches.__globals__["__spec__"]
         yield pd.DataFrame(
             {
-                "module": [zipimport.zipimporter.invalidate_caches.__module__],
+                "daemon": [sys.modules["__main__"].__spec__.name],
+                "owner": [owner.name],
                 "pre313": [sys.version_info < (3, 13)],
             }
         )
 
-    row = spark.range(1).mapInPandas(report, "module string, pre313 boolean").first()
-    assert row.module == ("mapreducegcp_spark.pydaemon" if row.pre313 else "zipimport")
+    row = spark.range(1).mapInPandas(report, "daemon string, owner string, pre313 boolean").first()
+    assert row.daemon == PYWORKER_DAEMON
+    assert row.owner == (PYWORKER_DAEMON if row.pre313 else "zipimport")
+
+
+# A session started outside the checkout, as a user of the package
+# would: the workers' cwd does not hold the package and the fast path
+# must not put it on their path, so a function that needs the package
+# by reference fails here as it would on a cluster.
+OUTSIDE_CHILD = """
+import json, sys
+sys.path.insert(0, {repo!r})
+from mapreducegcp_spark.session import get_spark
+
+
+def probe(batches):
+    import sys
+    import pandas as pd
+
+    for _ in batches:
+        pass
+    try:
+        import mapreducegcp_spark
+
+        found = mapreducegcp_spark.__file__
+    except ImportError:
+        found = None
+    yield pd.DataFrame({{"daemon": [sys.modules["__main__"].__spec__.name], "found": [found]}})
+
+
+spark = get_spark("outside-checkout", cpus=2)
+row = spark.range(1).mapInPandas(probe, "daemon string, found string").first()
+print(json.dumps(row.asDict()))
+"""
+
+
+def test_udf_outside_the_checkout_cannot_import_the_package(tmp_path):
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", OUTSIDE_CHILD.format(repo=str(REPO))],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=tmp_path,
+        env=env,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    lines = [line for line in out.stdout.splitlines() if line.startswith("{")]
+    assert json.loads(lines[-1]) == {"daemon": PYWORKER_DAEMON, "found": None}
 
 
 def test_add_py_file_module_imports_inside_a_udf(spark, tmp_path):

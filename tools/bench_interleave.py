@@ -5,7 +5,7 @@ Single-session BENCH_r{N}.json captures carry ±10-15% session noise on
 a ~15 s headline (measured round 10: same-tree totals spread 14.4-18.0 s
 across one session, calibration flat), so a cross-ROUND ratio of two
 single captures can read 1.2x with zero code change. This tool removes
-the session variable: it exports each revision with `git archive`
+the session variable: it checks out each revision into a git worktree
 and runs `bench.py --headline-only` ALTERNATING revision per run, N
 rounds, on one box in one session — every revision sees the same cache
 state, load, and thermal conditions — then reports min-of-N per query
@@ -16,8 +16,7 @@ where the committed artifacts said 13.39/15.93) is the worked example.
     python tools/bench_interleave.py --round N   # canonical per-round capture
 
 The working tree itself is always included as revision "worktree".
-Each REV is exported with ``git archive`` into a temporary directory
-(``$TMPDIR``) that is removed afterwards.
+Worktrees are created under /tmp and removed afterwards.
 
 ``--perfbench W`` is the perfbench pair mode: one REV (the parent) is
 paired against the working tree (the change). Each pair runs
@@ -44,8 +43,8 @@ and ``tools/bench_trend.py`` reads it first.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
-import shutil
 import statistics
 import subprocess
 import sys
@@ -139,20 +138,31 @@ def perfbench_pairs(args: argparse.Namespace, parent_tree: Path) -> dict:
     }
 
 
-def checkout(rev: str, tmp: Path) -> tuple[str, Path]:
-    """Export ``rev``'s committed files under ``tmp``; returns its
-    display name and directory."""
-    short = subprocess.run(
-        ["git", "rev-parse", "--short", rev],
-        cwd=REPO, capture_output=True, text=True, check=True,
-    ).stdout.strip()
-    dst = tmp / short
-    dst.mkdir()
-    archive = subprocess.Popen(["git", "-C", str(REPO), "archive", rev], stdout=subprocess.PIPE)
-    subprocess.run(["tar", "-x", "-C", str(dst)], stdin=archive.stdout, check=True)
-    if archive.wait() != 0:
-        raise RuntimeError(f"git archive {rev} failed")
-    return f"{rev}@{short}", dst
+@contextlib.contextmanager
+def worktrees(revs: list[str]):
+    """Check out each REV into a git worktree under /tmp; yields
+    ``{"REV@short": path}`` and removes the worktrees afterwards."""
+    trees: dict[str, Path] = {}
+    tmp = Path(tempfile.mkdtemp(prefix="bench_ilv_"))
+    try:
+        for rev in revs:
+            short = subprocess.run(
+                ["git", "rev-parse", "--short", rev],
+                cwd=REPO, capture_output=True, text=True, check=True,
+            ).stdout.strip()
+            dst = tmp / short
+            subprocess.run(
+                ["git", "worktree", "add", str(dst), rev],
+                cwd=REPO, check=True, capture_output=True,
+            )
+            trees[f"{rev}@{short}"] = dst
+        yield trees
+    finally:
+        for dst in trees.values():
+            subprocess.run(
+                ["git", "worktree", "remove", "--force", str(dst)],
+                cwd=REPO, capture_output=True,
+            )
 
 
 def _git(*args: str) -> str:
@@ -213,11 +223,8 @@ def main() -> None:
     if args.perfbench is not None:
         if len(args.revs) != 1 or args.round is not None:
             raise SystemExit("--perfbench pairs exactly one REV against the working tree")
-        tmp = Path(tempfile.mkdtemp(prefix="bench_ilv_"))
-        try:
-            out = perfbench_pairs(args, checkout(args.revs[0], tmp)[1])
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+        with worktrees(args.revs) as trees:
+            out = perfbench_pairs(args, *trees.values())
         if args.out:
             Path(args.out).write_text(json.dumps(out, indent=1))
         return
@@ -235,13 +242,8 @@ def main() -> None:
     elif not args.revs:
         raise SystemExit("pass revisions to compare, or --round N")
 
-    trees: dict[str, Path] = {"worktree": REPO}
-    tmp = Path(tempfile.mkdtemp(prefix="bench_ilv_"))
-    try:
-        for rev in args.revs:
-            name, dst = checkout(rev, tmp)
-            trees[name] = dst
-
+    with worktrees(args.revs) as made:
+        trees: dict[str, Path] = {"worktree": REPO, **made}
         captures: dict[str, list[dict]] = {k: [] for k in trees}
         for i in range(args.runs):
             for name, tree in trees.items():
@@ -306,8 +308,6 @@ def main() -> None:
             )
         if args.out:
             Path(args.out).write_text(json.dumps(out, indent=1))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 if __name__ == "__main__":
